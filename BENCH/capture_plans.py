@@ -81,21 +81,6 @@ def main() -> None:
         "per-query window for rank. Check: BroadcastNestedLoopJoin/"
         "BroadcastExchange on the small side only.")
 
-    from cuphic_spark.frontier.seen import _anti_seen
-
-    cands = spark.createDataFrame(
-        [(f"https://h{i}.x/{i}",) for i in range(50)], "url string")
-    seen_df = spark.read.parquet(nodes_path).select(
-        F.col("url"))  # stand-in big table
-    add("Broadcast seen-check (two-phase semi/anti)",
-        _anti_seen(cands, seen_df, "broadcast"),
-        "The seen side only STREAMS through two broadcast hash joins "
-        "(hits = seen semi-join broadcast(candidates), then "
-        "candidates anti-join broadcast(hits)). Check: two "
-        "BroadcastHashJoins, NO Exchange/Sort on the seen scan — at "
-        "10^10 seen rows this is the difference between a map-side "
-        "pass and shuffling the whole membership table every wave.")
-
     from cuphic_spark.operators.similarity import (
         build_ivf_index,
         ivf_topk_indexed,
@@ -122,23 +107,6 @@ def main() -> None:
         "the cell ASSIGNMENT (an Arrow-batched argmin over the "
         "broadcast centroids) differs, and it runs at index-build/"
         "probe-expansion time, never in the scan.")
-
-    from cuphic_spark.frontier.seen import prune_seen_paths
-
-    seen_dir = "/tmp/cuphic_plan_seen"
-    (spark.range(2000).selectExpr(
-        "concat('https://h', id % 50, '.x/', id) as url",
-        "0 as added_wave", "concat('h', id % 50, '.x') as host",
-        "cast(id % 8 as int) as part")
-     .repartition(8, "part")
-     .sortWithinPartitions("part", "url")
-     .write.mode("overwrite").parquet(seen_dir))
-    add("Partition-pruned seen read (footer-stat file selection)",
-        prune_seen_paths(spark, [seen_dir], [2, 5]),
-        "File list selected driver-side from parquet footer part "
-        "stats (manifest-style pruning), then a pushed part IN (...) "
-        "filter skips row groups inside kept files: check "
-        "PushedFilters on part and the bounded file count.")
 
     from cuphic_spark.frontier.robots import parse_robots, robots_allowed
 

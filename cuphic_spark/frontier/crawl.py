@@ -50,6 +50,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from xml.parsers import expat as _expat
 
@@ -58,6 +59,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import webgraph
+from .bands import ReadPlan
 from .seen import (
     bloom_est_fp,
     bloom_merge_urls,
@@ -91,16 +93,8 @@ class CrawlConfig:
     # rate (from the bitmap popcount, emitted per wave as
     # bloom_est_fp) crosses bloom_fp_rebuild; a fixed-size bloom
     # saturates silently at ~m/10 keys and quietly becomes a no-op
-    use_bloom: bool = True
-    bloom_mode: str = "global"    # 'global' (broadcast bitmap,
-    # accumulator-maintained on the seen write — right up to ~10^8
-    # seen urls) | 'sharded' (one bitmap per seen partition, probed
-    # and maintained via partition-local cogroups — the 10^10 design
-    # point where a single 16-bits/key bitmap is ~20 GB and cannot
-    # broadcast; executor memory is ONE shard, m_shard/8 bytes).
-    # Blooms only prune, so scheduling is byte-identical between the
-    # modes (invariance-pinned); only bloom_m/popcount metrics and
-    # the memory shape differ.
+    use_bloom: bool = True        # broadcast bloom prune ahead of the
+    # exact seen anti-join (folded incrementally per wave on the pool)
     bloom_min_seen: int = 50_000  # skip bloom build below this (the
     # prefilter only pays once the seen table dwarfs the candidates)
     bloom_fp_rebuild: float = 0.2  # est-fp threshold that schedules a
@@ -128,17 +122,6 @@ class CrawlConfig:
     # waves (0 = off; offline compaction via snapshots.compact_seen)
     page_weight: int = 30         # filler paragraphs per synthetic
     # page (~4 KB default; Common-Crawl-style bodies = 100-700)
-    seen_check: str = "auto"      # 'shuffle' | 'broadcast' | 'pruned' |
-    # 'auto': broadcast = two-phase semi/anti where the seen table only
-    # STREAMS (never shuffles) — the steady-state choice once seen
-    # dwarfs a wave's candidates; pruned = read ONLY the seen files
-    # whose part range intersects the candidates' partition ids (see
-    # seen.prune_seen_paths); auto switches at broadcast_seen_min
-    broadcast_seen_min: int = 5_000_000
-    broadcast_max_candidates: int = 2_000_000  # hard candidate ceiling
-    # for the broadcast strategy: a wave whose PREVIOUS links_distinct
-    # exceeded this falls back to shuffle (advisor: forcing
-    # F.broadcast over an unbounded candidate set can blow the driver)
     max_score_histogram: int = 10_000  # loud-failure guard: the
     # distributed top-W relies on scores being COARSE (few distinct
     # values); a fine-grained score_expr would silently turn the
@@ -155,12 +138,6 @@ class CrawlConfig:
     link_extract: str = "streaming"  # 'streaming' (tree-free expat
     # twin of the fixed link pattern, default) | 'kernel' (general
     # engine scan); results pinned identical by tests
-    pruned_seen_byte_frac: float = 0.5  # auto routing: take the
-    # footer-pruned seen read only when the kept files' byte footprint
-    # is at most this fraction of the full seen footprint (the cost
-    # signal comes from the same footer walk the pruned read needs
-    # anyway — round-3 verdict item 5 replaced the old partition-count
-    # ratio, which ignored how bytes actually cluster across files)
     robots_ttl_waves: int = 0     # robots-cache TTL in waves: epoch =
     # wave // ttl selects the rules version (0 = static spec, the
     # deterministic default); oracle models the same schedule
@@ -173,26 +150,6 @@ class CrawlConfig:
     # the status and the wave metrics count redirects. A custom
     # fetch_fn reports real statuses via the (status, location,
     # body) return shape.
-    aqe: str = "off"              # crawl-session AQE profile: 'off'
-    # (default) disables spark.sql.adaptive for the duration of the
-    # crawl (restoring the caller's setting on exit), 'inherit'
-    # leaves the session untouched. The crawl pre-partitions and
-    # host-salts explicitly, so AQE's runtime re-planning buys
-    # nothing inside a wave while its per-stage materialization
-    # barriers cost ~15 extra Spark jobs per wave (measured: 25
-    # jobs/wave AQE-on vs 10 off; steady-wave 8->32 speedup 1.94x vs
-    # 2.12x — BENCH/crawl_steady_r5.json aqe_off_experiment).
-    # Results are byte-identical either way (the determinism
-    # contract holds at any parallelism/plan): this knob is purely a
-    # scheduling-overhead profile.
-    broadcast_timeout: int = 3600  # spark.sql.broadcastTimeout for
-    # the crawl session (restored on exit; <= 0 leaves it untouched).
-    # The seen-check broadcast side's lineage embeds the wave's whole
-    # fetch+parse chain — its BUILD time grows with wave_cap, so the
-    # 300 s Spark default is a latent production failure (measured:
-    # a 4M-url bootstrap wave on 8 cores exceeded it). The router
-    # additionally never broadcasts without an affirmative volume
-    # hint; this timeout covers the legitimately-broadcast waves.
     extra: dict = field(default_factory=dict)
 
 
@@ -470,18 +427,41 @@ def _memo_cols(key, build):
     return val
 
 
+@dataclass
+class WaveResult:
+    """One wave's lazy plans, routing decision and metric readers, as
+    run_wave hands them to the wave loop.
+
+    The metric readers (``finish``, ``n_new``, ``n_links_distinct``,
+    ``new_score_counts``) read observations that ride the checkpoint
+    writes, so they are valid only after the writes they name ran."""
+    frontier_delta: DataFrame     # residual ∪ new rows, band/part/salt
+    # layout columns already added (write_wave_frontier prepped=True)
+    seen_delta: DataFrame         # plain (url, added_wave) projection
+    # the bloom/cuckoo folds read straight off the new_rows cache (the
+    # layout's repartition would cost those folds an extra shuffle)
+    seen_delta_out: DataFrame     # write-ready seen-delta layout
+    fetch_log: DataFrame
+    plan: ReadPlan                # the read plan the wave executed
+    delta_counts: dict            # frontier run-map precount parts
+    caches: list                  # unpersisted once the wave commits
+    cuckoo_probed: bool           # routing decision -> lineage
+    finish: Callable[[], dict]    # the metrics row (after all writes)
+    n_new: Callable[[], int]      # after the seen-delta write
+    n_links_distinct: Callable[[], int]  # after the seen-delta write
+    new_score_counts: Callable[[], list | None]  # ditto; None under
+    # non-default scoring
+
+
 def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
              manifest: dict, seen: DataFrame,
              n_seen_hint: int | None = None,
              cuckoo_shards: DataFrame | None = None,
              bloom: bytes | None = None,
              prev_links_hint: int | None = None,
-             seen_paths: list[str] | None = None,
              bloom_m: int | None = None,
-             bloom_shards: DataFrame | None = None,
-             pool=None):
-    """Returns (frontier_delta_prepped, seen_delta, fetch_log, finish,
-    caches, plan, seen_strategy, delta_counts, seen_delta_out).
+             pool=None) -> WaveResult:
+    """Build one wave's plans; returns a WaveResult.
 
     The wave never touches the whole frontier: ``manifest`` (see
     frontier/bands.py) describes the frontier as score-band files
@@ -752,23 +732,13 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                                               F.lit(0)).alias("t"))
                           .cache())
 
-        use_bloom = (bloom is not None or bloom_shards is not None) \
-            and cfg.use_bloom and (
-                n_seen_hint is None or n_seen_hint >= cfg.bloom_min_seen)
-        if not use_bloom:
+        if not (cfg.use_bloom and (n_seen_hint is None
+                                   or n_seen_hint >= cfg.bloom_min_seen)):
             bloom = None
-            bloom_shards = None
 
-        def _seen_filter(cand, seen_side):
-            """Bloom prune (global broadcast bitmap OR partition-local
-            shards — identical pruning semantics) + exact anti-join."""
+        def _seen_filter(cand):
+            """Bloom prune + exact shuffle anti-join."""
             nonlocal bloom
-            if bloom_shards is not None:
-                from .seen import filter_new_urls_sharded
-
-                return filter_new_urls_sharded(
-                    cand, seen_side, bloom_shards, cfg.partitions,
-                    strategy=seen_strategy)
             if hasattr(bloom, "result"):
                 # activation/rebuild build submitted as a pool future
                 # by _crawl_loop — joined HERE, the first point the
@@ -776,96 +746,8 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                 # the schedule phase's stats job instead of preceding
                 # it
                 bloom = bloom.result()
-            return filter_new_urls(cand, seen_side, bloom,
-                                   bloom_m or cfg.bloom_bits,
-                                   strategy=seen_strategy)
-
-        # the broadcast strategy forces F.broadcast(candidates): its
-        # correctness is unconditional but its MEMORY is bounded only by
-        # the candidate set, so both auto and explicit 'broadcast' fall
-        # back to shuffle when the previous wave's distinct-link volume
-        # (the best available predictor of this wave's candidates) exceeds
-        # the configured ceiling (advisor round-2 finding).
-        over_candidate_cap = (prev_links_hint is not None
-                              and prev_links_hint > cfg.broadcast_max_candidates)
-        parts_hit = None  # auto's probe is reused by the pruned branch —
-        # candidate_parts is a Spark job on the candidate chain; computing
-        # it twice per wave was a redundant action (advisor round-3, low)
-        kept_files = None  # ditto for the footer walk
-        if cfg.seen_check == "auto":
-            big_seen = (n_seen_hint is not None
-                        and n_seen_hint >= cfg.broadcast_seen_min)
-            # auto broadcasts only on an AFFIRMATIVE volume prediction: a
-            # MISSING hint (wave 0, or a resume without lineage metrics)
-            # must route conservatively — a first wave at production
-            # scale has unbounded candidates, and broadcasting them both
-            # risks driver memory (the cap exists for exactly this) and
-            # races spark.sql.broadcastTimeout, because the broadcast
-            # side's lineage embeds the whole fetch+parse chain (measured:
-            # the 4M-wave bootstrap blew the 300 s default on 8 cores —
-            # BENCH/crawl_steady_r7.json note)
-            can_broadcast = (prev_links_hint is not None
-                             and prev_links_hint
-                             <= cfg.broadcast_max_candidates)
-            if big_seen and can_broadcast:
-                seen_strategy = "broadcast"
-            elif big_seen and seen_paths is not None:
-                # candidates too big to broadcast against a huge seen
-                # table: if they cluster in few host partitions, a
-                # footer-pruned read of just those partitions beats
-                # shuffling the whole seen side. The parts probe is a
-                # <= cfg.partitions-row collect off the cached candidate
-                # chain; the cost model compares BYTES the pruned read
-                # would open vs the full seen footprint, from the same
-                # footer walk the pruned read needs anyway — the decision
-                # depends only on DATA (file sizes are deterministic
-                # functions of the partitioned writes: deterministic at
-                # any parallelism).
-                from .seen import candidate_parts, select_seen_files
-
-                parts_hit = candidate_parts(distinct_links, cfg.partitions)
-                kept_files, kept_b, total_b = select_seen_files(
-                    seen_paths, parts_hit, with_stats=True)
-                seen_strategy = (
-                    "pruned"
-                    if kept_b <= cfg.pruned_seen_byte_frac * total_b
-                    else "shuffle")
-            else:
-                seen_strategy = "shuffle"
-        else:
-            seen_strategy = cfg.seen_check
-            if seen_strategy == "broadcast" and over_candidate_cap:
-                import warnings
-
-                warnings.warn(
-                    f"seen_check='broadcast' with prev links_distinct="
-                    f"{prev_links_hint} > broadcast_max_candidates="
-                    f"{cfg.broadcast_max_candidates}; falling back to "
-                    "'shuffle' for this wave (broadcasting an unbounded "
-                    "candidate set can exceed driver memory)")
-                seen_strategy = "shuffle"
-
-        # the pruned strategy replaces the seen side with a footer-pruned
-        # read of ONLY the files intersecting the candidates' partition
-        # ids (see seen.prune_seen_paths); the partition-id collect is at
-        # most cfg.partitions rows and rides the cached distinct_links —
-        # candidate parts are computed from the full candidate set, a
-        # superset of the post-cuckoo to_check set (supersets only keep
-        # MORE files: always safe).
-        seen_for_check = seen
-        if seen_strategy == "pruned":
-            if seen_paths is None:
-                raise ValueError(
-                    "seen_check='pruned' needs the seen PATHS (run_wave "
-                    "seen_paths=...); a bare DataFrame cannot be file-"
-                    "pruned")
-            from .seen import candidate_parts, prune_seen_paths
-
-            if parts_hit is None:  # explicit seen_check='pruned' (auto
-                # already computed the probe while routing)
-                parts_hit = candidate_parts(distinct_links, cfg.partitions)
-            seen_for_check = prune_seen_paths(spark, seen_paths, parts_hit,
-                                              kept=kept_files)
+            return filter_new_urls(cand, seen, bloom,
+                                   bloom_m or cfg.bloom_bits)
 
         candidates = distinct_links
         use_cuckoo = (cfg.use_cuckoo and cuckoo_shards is not None
@@ -890,10 +772,10 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
                      .drop("maybe_seen_cuckoo", "partition"))
             to_check = (flagged.where(F.col("maybe_seen_cuckoo"))
                         .drop("maybe_seen_cuckoo", "partition"))
-            confirmed = _seen_filter(to_check, seen_for_check)
+            confirmed = _seen_filter(to_check)
             new_urls = fresh.unionByName(confirmed)
         else:
-            new_urls = _seen_filter(candidates, seen_for_check)
+            new_urls = _seen_filter(candidates)
         # no frontier anti-join needed: every frontier url is already in
         # seen (seeds via seen_seed, discoveries via their wave's delta),
         # so surviving the seen anti-join implies not-pending either —
@@ -1021,7 +903,11 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         # provisional chain above never ran (everything below the
         # ranked cache is lazy; its Observations and accumulator die
         # with it) — drop its cache registrations and rebuild over
-        # the extended read set.
+        # the extended read set. The discarded layout build is
+        # cancelled, or awaited if it already started, so it never
+        # outlives its round and its error is never lost.
+        if f_layouts is not None and not f_layouts.cancel():
+            f_layouts.result()
         for c in (ranked, stats_q, with_rank, fetched, distinct_links,
                   new_rows):
             c.unpersist()
@@ -1129,11 +1015,6 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         return [(new_score_base + r, int(m[f"c{r}"]))
                 for r in range(7) if int(m[f"c{r}"])]
 
-    finish.n_new = n_new
-    finish.n_links_distinct = n_links_distinct
-    finish.new_score_counts = new_score_counts
-    finish.cuckoo_probed = use_cuckoo  # routing decision -> lineage
-
     caches = [*frontier_caches, ranked, stats_q, fetched,
               distinct_links, new_rows, with_rank]
     # Per-score counts of the delta's four branches, split by HOW
@@ -1160,14 +1041,13 @@ def run_wave(spark: SparkSession, cfg: CrawlConfig, wave: int,
         "late": late_counts_df,
         "driver": unsched_counts,
     }
-    # frontier_delta_prepped carries the band/part/salt layout columns
-    # (write_wave_frontier prepped=True); seen_delta_out is the
-    # write-ready seen-delta layout; seen_delta itself stays the plain
-    # projection the bloom/cuckoo maintenance reads straight off the
-    # new_rows cache (the layouts' repartition would cost those folds
-    # an extra shuffle)
-    return (frontier_delta_prepped, seen_delta, fetch_log, finish,
-            caches, plan, seen_strategy, delta_counts, seen_delta_out)
+    return WaveResult(
+        frontier_delta=frontier_delta_prepped, seen_delta=seen_delta,
+        seen_delta_out=seen_delta_out, fetch_log=fetch_log, plan=plan,
+        delta_counts=delta_counts, caches=caches,
+        cuckoo_probed=use_cuckoo, finish=finish, n_new=n_new,
+        n_links_distinct=n_links_distinct,
+        new_score_counts=new_score_counts)
 
 
 def _wave_dir(cfg: CrawlConfig, wave: int) -> str:
@@ -1214,8 +1094,7 @@ def _partition_layout(df: DataFrame, cfg: CrawlConfig,
             "host_salt",
             F.pmod(F.xxhash64("url"), F.lit(cfg.salt_buckets)).cast("int"))
     # seen writes (no score) sort by (part, url): part-first keeps
-    # row-group part ranges tight, which is what lets the pruned seen
-    # strategy skip row groups via footer stats (seen.prune_seen_paths)
+    # row-group part ranges tight in the on-disk seen format
     sort_keys = ([F.desc("score"), F.asc("url")]
                  if "score" in df.columns
                  else [F.asc("part"), F.asc("url")])
@@ -1224,8 +1103,7 @@ def _partition_layout(df: DataFrame, cfg: CrawlConfig,
 
 
 def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig,
-                       salt: bool = False, dir_partitioned: bool = True,
-                       bloom_acc=None):
+                       salt: bool = False, dir_partitioned: bool = True):
     """Seen snapshots/deltas (frontier writes go through
     bands.write_wave_frontier, which applies the same layout INSIDE
     each score band): partitioned by pmod(xxhash64(host),P)
@@ -1236,37 +1114,8 @@ def _partitioned_write(df: DataFrame, path: str, cfg: CrawlConfig,
     dir_partitioned=False keeps `part` as a data column (flat layout)
     — required for the seen DELTA dirs, which are read as a multi-root
     union (partition-directory inference would see conflicting
-    structures across roots).
-
-    ``bloom_acc`` (a seen.BloomUpdateAccumulator) folds bloom
-    maintenance INTO this write: an order-preserving mapInPandas
-    stage accumulates each batch's bit positions while the rows
-    stream to parquet — one pass, no separate per-wave bloom job.
-    The hashes are JVM-computed (F.xxhash64, the same expression the
-    probe uses) and dropped before the write, so the on-disk layout
-    is unchanged."""
-    out = _partition_layout(df, cfg, salt=salt)
-    if bloom_acc is not None:
-        if dir_partitioned:
-            raise ValueError("bloom_acc is wired for the flat seen-"
-                             "delta layout only")
-        out_schema = out.schema
-        acc = bloom_acc
-
-        def fold(batches):
-            # one accumulator update per TASK (see
-            # BloomUpdateAccumulator): chunks collected across the
-            # generator's batches, sent once at partition end
-            chunks = []
-            for pdf in batches:
-                if len(pdf):
-                    chunks.append(acc.positions(pdf["__h"]))
-                yield pdf.drop(columns="__h")
-            acc.add_positions(chunks)
-
-        out = (out.withColumn("__h", F.xxhash64("url"))
-               .mapInPandas(fold, out_schema))
-    writer = out.write.mode("overwrite")
+    structures across roots)."""
+    writer = _partition_layout(df, cfg, salt=salt).write.mode("overwrite")
     if dir_partitioned:
         writer = writer.partitionBy("part")
     writer.parquet(path)
@@ -1350,22 +1199,18 @@ def _read_seen(spark: SparkSession, cfg: CrawlConfig,
 def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     """Run (or resume) the crawl up to cfg.n_waves. Returns summary.
 
-    Applies the crawl-session AQE profile (see CrawlConfig.aqe) around
-    the wave loop and restores the caller's setting on exit — the
-    profile changes Spark-job count per wave, never any output."""
+    Applies the crawl-session profile below around the wave loop and
+    restores the caller's settings on exit. Every setting is plan-shape
+    only: it changes Spark-job count per wave, never any output (the
+    determinism contract holds at any parallelism and plan)."""
     from concurrent.futures import ThreadPoolExecutor
 
-    prior = None
-    if cfg.aqe == "off":
-        prior = spark.conf.get("spark.sql.adaptive.enabled", "true")
-        spark.conf.set("spark.sql.adaptive.enabled", "false")
-    prior_bt = None
-    if cfg.broadcast_timeout > 0:
-        prior_bt = spark.conf.get("spark.sql.broadcastTimeout", "300")
-        spark.conf.set("spark.sql.broadcastTimeout",
-                       str(cfg.broadcast_timeout))
-    # two more crawl-session profile knobs (restored on exit; both are
-    # plan-shape only — results are identical at any setting):
+    # * adaptive.enabled=false: the crawl pre-partitions and host-salts
+    #   explicitly, so AQE's runtime re-planning buys nothing inside a
+    #   wave while its per-stage materialization barriers cost ~15
+    #   extra Spark jobs per wave (measured: 25 jobs/wave AQE-on vs 10
+    #   off; steady-wave 8->32 speedup 1.94x vs 2.12x —
+    #   BENCH/crawl_steady_r5.json aqe_off_experiment).
     # * limit.initialNumPartitions: the run-map / probe collects are
     #   `limit(N).collect()` with a TINY true row count (coarse-score
     #   contract); the default incremental take (1, 4, 16, ... parts)
@@ -1377,31 +1222,30 @@ def crawl(spark: SparkSession, cfg: CrawlConfig) -> dict:
     #   for the seen anti-join (guide §3.1) — skips sorting both
     #   sides; Spark's own build-side size conditions still gate it,
     #   so oversized partitions fall back to sort-merge.
-    prior_take = spark.conf.get("spark.sql.limit.initialNumPartitions",
-                                None)
-    spark.conf.set("spark.sql.limit.initialNumPartitions", str(1 << 20))
-    prior_smj = spark.conf.get("spark.sql.join.preferSortMergeJoin",
-                               None)
-    spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
-    # the pool that runs the pipelined checkpoint writes is owned HERE
-    # so any exception inside the loop still joins in-flight writes
-    # (a write racing session teardown is worse than a leaked cache)
-    # 5 slots: fetch_log + frontier + cuckoo + sharded-bloom writes +
-    # the bloom bitmap fold can all be in flight once the seen delta
-    # commits
+    profile = {"spark.sql.adaptive.enabled": "false",
+               "spark.sql.limit.initialNumPartitions": str(1 << 20),
+               "spark.sql.join.preferSortMergeJoin": "false"}
+    prior = {key: spark.conf.get(key, None) for key in profile}
+    for key, val in profile.items():
+        spark.conf.set(key, val)
+    # The pool that runs the overlapped jobs and pipelined checkpoint
+    # writes is owned HERE so any exception inside the loop still
+    # joins in-flight writes (a write racing session teardown is worse
+    # than a leaked cache). Its one rule: NO POOL TASK WAITS ON A
+    # FUTURE SUBMITTED AFTER IT. The queue is FIFO, so every future a
+    # running task waits on has already started on another worker —
+    # no worker count can deadlock. 5 slots = the most in flight at
+    # once: after the seen-delta commit, the fetch_log write, the
+    # frontier write, the cuckoo maintenance, the bloom fold and the
+    # residual score counts (the schedule phase overlaps at most four:
+    # the previous wave's finalize, a bloom build, the stats job and
+    # the layout build).
     pool = ThreadPoolExecutor(max_workers=5)
     try:
         return _crawl_loop(spark, cfg, pool)
     finally:
         pool.shutdown(wait=True)
-        if prior is not None:
-            spark.conf.set("spark.sql.adaptive.enabled", prior)
-        if prior_bt is not None:
-            spark.conf.set("spark.sql.broadcastTimeout", prior_bt)
-        for key, val in (("spark.sql.limit.initialNumPartitions",
-                          prior_take),
-                         ("spark.sql.join.preferSortMergeJoin",
-                          prior_smj)):
+        for key, val in prior.items():
             if val is None:
                 spark.conf.unset(key)
             else:
@@ -1441,7 +1285,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         f_seed.result()
         seen = _read_seen(spark, cfg, -1)
         n_seen = cfg.n_seeds
-        seen_paths = _seen_delta_paths(cfg, -1)
     else:
         prev = _wave_dir(cfg, start - 1)
         # cuckoo shards bake the partition id they were built for;
@@ -1474,7 +1317,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
                 "layout — resume with the recorded value")
         seen = _read_seen(spark, cfg, start - 1)
         n_seen = seen.count()  # parquet footer count — cheap
-        seen_paths = _seen_delta_paths(cfg, start - 1)
         prev_links = prev_lineage.get("metrics", {}).get("links_distinct")
 
     cuckoo_shards = None
@@ -1490,11 +1332,9 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
     bloom = None
     bloom_m = cfg.bloom_bits
     bloom_rebuild = False
-    bloom_shards = None           # sharded mode: (partition, bitmap) DF
-    shard_m = cfg.bloom_bits      # per-shard bit count
     if cfg.use_bloom and start > 0:
         prev_bloom = os.path.join(_wave_dir(cfg, start - 1), "bloom.bin")
-        if cfg.bloom_mode != "sharded" and os.path.exists(prev_bloom):
+        if os.path.exists(prev_bloom):
             with open(prev_bloom, "rb") as fh:
                 bloom = fh.read()
             # the effective bit count is persisted via the bitmap
@@ -1502,18 +1342,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             # is re-derived from the last wave's recorded est-fp so a
             # resumed run reproduces the uninterrupted one exactly
             bloom_m = (len(bloom) - 1) * 8
-            prev_fp = prev_lineage.get("metrics", {}).get("bloom_est_fp")
-            bloom_rebuild = (prev_fp is not None
-                             and prev_fp > cfg.bloom_fp_rebuild)
-        prev_shards = os.path.join(_wave_dir(cfg, start - 1),
-                                   "bloom_shards")
-        if cfg.bloom_mode == "sharded" and os.path.isdir(prev_shards):
-            from .seen import bloom_shard_bits
-
-            bloom_shards = spark.read.parquet(prev_shards)
-            one = bloom_shards.select("bitmap").limit(1).collect()
-            if one:  # shard_m persisted via bitmap length, like bloom.bin
-                shard_m = bloom_shard_bits(bytes(one[0].bitmap))
             prev_fp = prev_lineage.get("metrics", {}).get("bloom_est_fp")
             bloom_rebuild = (prev_fp is not None
                              and prev_fp > cfg.bloom_fp_rebuild)
@@ -1573,27 +1401,7 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # serially between the schedule phase and the writes)
         f_fin = (pool.submit(_finalize, pending)
                  if pending is not None else None)
-        shards_cache = None  # activation/rebuild cache, freed post-merge
-        if (cfg.use_bloom and cfg.bloom_mode == "sharded"
-                and n_seen >= cfg.bloom_min_seen):
-            # sharded activation / saturation rebuild: per-shard auto
-            # size targets ~16 bits/key of the partition's share
-            # (uniform pmod split); ×8 rebuild capped per shard at
-            # the same BLOOM_MAX_BITS. The build is a distributed
-            # applyInPandas — no driver bitmap at any point.
-            if bloom_shards is None or (bloom_rebuild
-                                        and shard_m < BLOOM_MAX_BITS):
-                from .seen import build_bloom_shards
-
-                if bloom_shards is None:
-                    shard_m = bloom_auto_bits(
-                        max(1, n_seen // max(1, cfg.partitions)))
-                else:
-                    shard_m = min(shard_m * 8, BLOOM_MAX_BITS)
-                bloom_shards = build_bloom_shards(
-                    seen, cfg.partitions, shard_m).cache()
-                shards_cache = bloom_shards
-        elif cfg.use_bloom and n_seen >= cfg.bloom_min_seen:
+        if cfg.use_bloom and n_seen >= cfg.bloom_min_seen:
             if bloom is None:
                 # first activation: size from the KNOWN seen count
                 # (~16 bits/key -> est-fp ~0.5%) instead of starting
@@ -1618,28 +1426,27 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
                 # the same 2^27 (16 MiB) broadcast ceiling as first
                 # activation — past the cap the bitmap stays saturated
                 # but still-correct (it only prunes; the anti-join is
-                # exact) and the cost router will stop consulting it.
+                # exact).
                 bloom_m = min(bloom_m * 8, BLOOM_MAX_BITS)
                 bloom = pool.submit(build_bloom, seen, bloom_m)
         bloom_rebuild = False
         _mark("bloom_build")
-        (frontier_delta, seen_delta, fetch_log, finish, caches,
-         plan, seen_strategy, delta_counts, seen_delta_out) = run_wave(
+        res = run_wave(
             spark, cfg, wave, manifest, seen, n_seen_hint=n_seen,
             cuckoo_shards=cuckoo_shards, bloom=bloom,
-            prev_links_hint=prev_links, seen_paths=seen_paths,
-            bloom_m=bloom_m, bloom_shards=bloom_shards, pool=pool)
+            prev_links_hint=prev_links, bloom_m=bloom_m, pool=pool)
         # the residual half of the frontier delta's score histogram
         # reads only schedule-phase caches — count it on the pool NOW
         # so the collect overlaps the seen-delta write below; the
         # other half (unscheduled/new) is counted after that write
         # commits, inside write_frontier (see run_wave delta_counts)
-        f_early_counts = pool.submit(_score_counts, delta_counts["early"])
+        f_early_counts = pool.submit(_score_counts,
+                                     res.delta_counts["early"])
         if hasattr(bloom, "result"):
             # activation/rebuild future: resolved inside run_wave's
             # seen-filter plan build (overlapping the stats job);
             # here it is already done — this just unwraps the bytes
-            # for the accumulator fold below
+            # for the bloom fold below
             bloom = bloom.result()
         _mark("schedule")
         # the previous wave's fetch_log drain + finalize overlapped
@@ -1677,36 +1484,25 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # keeps the overlap (fetch_log serialization shares the
         # cluster with the frontier write + next wave's planning)
         # without the blocked-slot tax.
-        def write_fetch_log():
-            fetch_log.write.mode("overwrite").parquet(
-                os.path.join(d, "fetch_log"))
-
-        def write_seen_delta():
-            # layout prebuilt by run_wave (seen_delta_out) inside the
-            # overlapped construction window — only the write command
-            # itself is planned here
-            seen_delta_out.write.mode("overwrite").parquet(
-                os.path.join(d, "seen_delta"))
-
         def write_frontier():
             # merge the overlapped residual counts, the driver-derived
             # unscheduled counts and the new-row counts (observed on
             # the seen-delta write under default scoring, else one
             # small job over the new-rows cache); the frontier write
             # then skips its run-map aggregation pass
-            merged: dict[int, int] = dict(delta_counts["driver"])
-            new_counts = finish.new_score_counts()
+            merged: dict[int, int] = dict(res.delta_counts["driver"])
+            new_counts = res.new_score_counts()
             if new_counts is None:
-                new_counts = [(int(r["score"]), int(r["cnt"]))
-                              for r in _score_counts(delta_counts["late"])]
+                new_counts = [(int(r["score"]), int(r["cnt"])) for r in
+                              _score_counts(res.delta_counts["late"])]
             for s, c in new_counts:
                 merged[s] = merged.get(s, 0) + c
             for r in f_early_counts.result():
                 s = int(r["score"])
                 merged[s] = merged.get(s, 0) + int(r["cnt"])
             return bands_mod.write_wave_frontier(
-                spark, frontier_delta, os.path.join(d, "frontier"),
-                cfg, manifest, plan,
+                spark, res.frontier_delta, os.path.join(d, "frontier"),
+                cfg, manifest, res.plan,
                 score_counts=sorted(merged.items()), prepped=True)
 
         def maintain_cuckoo(n_seen_after, probe_next):
@@ -1726,59 +1522,47 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             from .seen import maintain_cuckoo_shards
 
             return maintain_cuckoo_shards(
-                cuckoo_shards, seen_delta.select("url"),
+                cuckoo_shards, res.seen_delta.select("url"),
                 _read_seen(spark, cfg, wave), cfg.partitions,
                 path=os.path.join(d, "cuckoo"))
 
-        def maintain_bloom_shards():
-            # sharded-mode maintenance: OR the wave's delta into each
-            # touched shard (cogroup, partition-local) and persist —
-            # the sharded twin of the accumulator fold, with zero
-            # driver-side bitmap; stats feed the same est-fp signal
-            if bloom_shards is None or cfg.bloom_mode != "sharded":
-                return None
-            from .seen import bloom_shards_stats, merge_bloom_shards
-
-            p = os.path.join(d, "bloom_shards")
-            merge_bloom_shards(bloom_shards, seen_delta.select("url"),
-                               cfg.partitions, shard_m) \
-                .write.mode("overwrite").parquet(p)
-            new_df = spark.read.parquet(p)
-            return (new_df,) + bloom_shards_stats(new_df)
-
-        f_seen = pool.submit(write_seen_delta)
-        f_seen.result()
-        f_log = pool.submit(write_fetch_log)
+        # layout prebuilt by run_wave inside the overlapped
+        # construction window — only the write command itself is
+        # planned here; it runs alone, on this thread, and every job
+        # below is submitted after it commits
+        res.seen_delta_out.write.mode("overwrite").parquet(
+            os.path.join(d, "seen_delta"))
+        # bound now, not looked up when the task runs: this future
+        # drains during the NEXT wave, which rebinds res and d
+        f_log = pool.submit(res.fetch_log.write.mode("overwrite").parquet,
+                            os.path.join(d, "fetch_log"))
         f_frontier = pool.submit(write_frontier)
-        f_bshards = pool.submit(maintain_bloom_shards)
         # bloom maintenance: fold the committed delta (cached
         # new_rows — obs_new rode the seen write, so the cache is
-        # warm) into the bitmap on the pool; bit-identical to the
-        # old in-write accumulator (same xxhash64 -> _bit_indices
-        # positions), overlapping the fetch_log/frontier writes
-        # instead of taxing the seen-delta write with a pandas pass
+        # warm) into the bitmap on the pool, overlapping the
+        # fetch_log/frontier writes
         f_bloom = (pool.submit(bloom_merge_urls,
-                               seen_delta.select("url"), bloom_m, bloom,
+                               res.seen_delta.select("url"), bloom_m, bloom,
                                16)
                    if (cfg.use_bloom and bloom is not None) else None)
         # obs_new/obs_links rode the just-committed seen write —
         # the cuckoo maintenance decision needs the post-wave
         # seen count and candidate volume without blocking on the
         # fetch_log write's observation
-        n_seen_after = n_seen + finish.n_new()
+        n_seen_after = n_seen + res.n_new()
         probe_next = (
             cfg.use_cuckoo
             and n_seen_after >= cfg.cuckoo_min_seen
             and (cfg.cuckoo_probe_min_ratio == 0
                  or n_seen_after >= cfg.cuckoo_probe_min_ratio
-                 * max(finish.n_links_distinct(), 1)))
+                 * max(res.n_links_distinct(), 1)))
         f_cuckoo = pool.submit(maintain_cuckoo, n_seen_after,
                                probe_next)
         # metrics that do NOT ride the fetch_log write are assembled
-        # now (bloom fold needs only the committed seen delta — the
-        # accumulator rode that write); the obs_fetch-backed ones are
+        # now (the bloom fold needs only the committed seen delta);
+        # the obs_fetch-backed ones are
         # read in _finalize, after the deferred f_log drain
-        extra_metrics = {"frontier_rows_read": plan.rows_read}
+        extra_metrics = {"frontier_rows_read": res.plan.rows_read}
         n_seen = n_seen_after
         if f_bloom is not None:
             # join the pool-side fold, persist + saturation signal
@@ -1789,16 +1573,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
             extra_metrics["bloom_m"] = bloom_m
             extra_metrics["bloom_popcount"] = pc
             extra_metrics["bloom_est_fp"] = bloom_est_fp(pc, bloom_m)
-            bloom_rebuild = (extra_metrics["bloom_est_fp"]
-                             > cfg.bloom_fp_rebuild)
-        bs = f_bshards.result()
-        if bs is not None:
-            if shards_cache is not None:
-                shards_cache.unpersist()  # merged parquet replaces it
-            bloom_shards, m_total, pc = bs
-            extra_metrics["bloom_m"] = m_total
-            extra_metrics["bloom_popcount"] = pc
-            extra_metrics["bloom_est_fp"] = bloom_est_fp(pc, m_total)
             bloom_rebuild = (extra_metrics["bloom_est_fp"]
                              > cfg.bloom_fp_rebuild)
         new_manifest, rows_written = f_frontier.result()
@@ -1820,8 +1594,8 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         # this wave's fetch_log drain + metrics/lineage/caches are
         # DEFERRED past the next wave's schedule phase (see _finalize)
         pending = {
-            "wave": wave, "dir": d, "f_log": f_log, "finish": finish,
-            "caches": caches, "extra_metrics": extra_metrics, "tt": tt,
+            "wave": wave, "dir": d, "f_log": f_log, "finish": res.finish,
+            "caches": res.caches, "extra_metrics": extra_metrics, "tt": tt,
             "lineage_base": {
                 "wave": wave,
                 "input_wave_dir": (_wave_dir(cfg, wave - 1) if wave
@@ -1830,11 +1604,14 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
                 "seen_deltas": _seen_delta_paths(cfg, wave),
                 "frontier_manifest": bands_mod.manifest_path(
                     os.path.join(d, "frontier")),
-                "frontier_bands_read": plan.read_bands,
-                "frontier_segments_read": sorted(plan.consumed_keys()),
-                "frontier_score_cut": plan.s_cut,
-                "seen_strategy": seen_strategy,
-                "cuckoo_probe": finish.cuckoo_probed,
+                "frontier_bands_read": res.plan.read_bands,
+                "frontier_segments_read": sorted(
+                    res.plan.consumed_keys()),
+                "frontier_score_cut": res.plan.s_cut,
+                # the one exact-check path; the key stays so existing
+                # checkpoints and lineage readers see the same schema
+                "seen_strategy": "shuffle",
+                "cuckoo_probe": res.cuckoo_probed,
                 "config": {"universe": cfg.universe,
                            "n_seeds": cfg.n_seeds,
                            "budget_per_host": cfg.budget_per_host,
@@ -1846,8 +1623,7 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
         }
         manifest = new_manifest
         seen = _read_seen(spark, cfg, wave)
-        seen_paths = _seen_delta_paths(cfg, wave)
-        prev_links = finish.n_links_distinct()
+        prev_links = res.n_links_distinct()
         if cfg.compact_every and (wave + 1) % cfg.compact_every == 0:
             # compaction must see a fully-committed wave (and resume
             # correctness must never find a compacted snapshot ahead
@@ -1859,7 +1635,6 @@ def _crawl_loop(spark: SparkSession, cfg: CrawlConfig, pool) -> dict:
 
             compact_seen(spark, cfg, upto_wave=wave)
             seen = _read_seen(spark, cfg, wave)  # re-root on the compact
-            seen_paths = _seen_delta_paths(cfg, wave)
     if pending is not None:
         _finalize(pending)
     return {"start_wave": start, "metrics": all_metrics,
@@ -1890,8 +1665,6 @@ def _main() -> None:
     ap.add_argument("--cores", type=int, default=8)
     ap.add_argument("--compact-every", type=int, default=0,
                     help="auto-compact seen deltas every N waves")
-    ap.add_argument("--seen-check", default="auto",
-                    choices=["auto", "shuffle", "broadcast", "pruned"])
     args = ap.parse_args()
 
     spark = get_spark(app_name="cuphic-crawl", cores=args.cores)
@@ -1900,8 +1673,7 @@ def _main() -> None:
                       n_waves=args.waves,
                       checkpoint_dir=args.checkpoint_dir,
                       partitions=args.partitions,
-                      compact_every=args.compact_every,
-                      seen_check=args.seen_check)
+                      compact_every=args.compact_every)
     summary = crawl(spark, cfg)
     print(json.dumps(summary, indent=1))
 

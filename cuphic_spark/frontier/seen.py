@@ -7,18 +7,17 @@ false negatives impossible); exactness always comes from the
 identical at any parallelism level — the crux of matching crawl
 ordering at local[8] vs local[32] (SURVEY §7.4).
 
-Scale design (10^10 urls):
+Scale design:
 
-* the seen table is parquet partitioned by ``pmod(xxhash64(host), P)``;
-  the exact check has two physical strategies (``_anti_seen``): a
-  plain shuffle anti-join, or a broadcast semi/anti two-phase where
-  the seen table only STREAMS — the steady-state choice once seen
-  dwarfs a wave's candidates;
-* the broadcast bloom is FIXED SIZE (default 2^22 bits = 512 KiB):
-  built distributedly as per-partition bitmaps (tree-merged, driver
-  cost bounded by 8·m/8 bytes) and maintained INCREMENTALLY by
-  OR-ing each wave's delta; at extreme scale it saturates toward
-  no-op pruning but never breaks correctness;
+* the seen table is parquet partitioned by ``pmod(xxhash64(host), P)``
+  and sorted by (part, url); the exact check is ONE path — a plain
+  shuffle ``left_anti`` join of the bloom survivors against it;
+* the broadcast bloom is FIXED SIZE per activation (sized from the
+  seen count, ×8 on saturation, capped at 2^27 bits): built
+  distributedly as per-partition bitmaps (tree-merged, driver cost
+  bounded by 8·m/8 bytes) and maintained INCREMENTALLY by OR-ing each
+  wave's delta; past the cap it saturates toward no-op pruning but
+  never breaks correctness;
 * cuckoo shards give per-partition ~8 bits/key membership with
   deletions (needed when a frontier partition is re-scored); bucket
   counts are powers of two so the xor-fold alternate bucket is an
@@ -31,7 +30,6 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark import AccumulatorParam
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -138,73 +136,6 @@ def bloom_est_fp(popcount: int, m: int) -> float:
     return (popcount / m) ** _K_HASHES
 
 
-class _ListParam(AccumulatorParam):
-    def zero(self, value):
-        return []
-
-    def addInPlace(self, a, b):
-        a.extend(b)
-        return a
-
-
-class BloomUpdateAccumulator:
-    """Fold bloom maintenance INTO the seen-delta write (one pass):
-    tasks accumulate their delta's bit positions while the rows
-    stream to parquet — the separate per-wave bloom job disappears.
-
-    Each task contributes ONE update — either its raw position
-    arrays (small deltas) or a pre-folded partial bitmap (when the
-    positions would outweigh m/8 bytes) — so the driver-bound update
-    volume per wave is min(24·|delta_rows_in_task|, m/8) per task
-    (accumulating per Arrow BATCH instead would make the bitmap
-    fallback unreachable — batches are always small — and ship
-    24 bytes/url unconditionally: GBs at 10^8-url waves). OR-ing
-    bitmaps is IDEMPOTENT, so task retries/speculation can only
-    re-set the same bits — the merged bitmap is exact even when
-    accumulator updates are delivered more than once (unlike
-    counting accumulators).
-    """
-
-    def __init__(self, spark, m: int):
-        self.m = m
-        self.acc = spark.sparkContext.accumulator([], _ListParam())
-
-    def positions(self, h: "pd.Series") -> np.ndarray:
-        """Executor-side: one batch's bit positions (no send)."""
-        return _bit_indices(h, self.m).reshape(-1).astype(np.int64)
-
-    def add_positions(self, chunks: list) -> None:
-        """Executor-side, once per TASK: send the task's accumulated
-        position chunks — as positions if small, else folded into a
-        single partial bitmap."""
-        if not chunks:
-            return
-        nbytes = self.m // 8 + 1
-        total = sum(c.nbytes for c in chunks)
-        if total < nbytes:
-            self.acc.add([("pos", c.tobytes()) for c in chunks])
-        else:
-            arr = np.zeros(nbytes, dtype=np.uint8)
-            for idx in chunks:
-                np.bitwise_or.at(arr, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-            self.acc.add([("bmp", arr.tobytes())])
-
-    def merged(self, base: bytes | None = None) -> bytes:
-        """Driver-side: fold the accumulated updates into ``base``."""
-        nbytes = self.m // 8 + 1
-        out = (np.frombuffer(base, dtype=np.uint8).copy()
-               if base is not None else np.zeros(nbytes, dtype=np.uint8))
-        for kind, blob in self.acc.value:
-            if kind == "bmp":
-                out |= np.frombuffer(blob, dtype=np.uint8)
-            else:
-                idx = np.frombuffer(blob, dtype=np.int64)
-                np.bitwise_or.at(out, idx // 8,
-                                 (1 << (idx % 8)).astype(np.uint8))
-        return out.tobytes()
-
-
 def build_bloom(seen: DataFrame, m: int = BLOOM_BITS_DEFAULT) -> bytes:
     """Full bloom build over a seen table (first activation / resume
     without a persisted bitmap). Per-wave maintenance should use
@@ -232,320 +163,18 @@ def bloom_maybe_seen(candidates: DataFrame, bloom: bytes,
     return candidates.withColumn("maybe_seen", probe(F.xxhash64("url")))
 
 
-def _anti_seen(candidates: DataFrame, seen: DataFrame,
-               strategy: str) -> DataFrame:
-    """The exact membership check, three physical strategies:
-
-    * ``shuffle`` — plain left_anti: BOTH sides shuffle on url. Right
-      when seen and candidates are comparable in size.
-    * ``broadcast`` — two-phase semi/anti: ``hits`` = seen ⋉
-      broadcast(candidates) (the seen table only STREAMS through a
-      map-side broadcast hash join — no shuffle, no sort of 10^10
-      rows), then candidates ⟕̸ broadcast(hits). Right when seen
-      dwarfs the wave's candidates (the steady-state crawl); driver
-      memory is bounded by the candidate set, which bloom+cuckoo
-      pruning keeps small — the crawl enforces a hard candidate
-      ceiling (CrawlConfig.broadcast_max_candidates) via the previous
-      wave's links_distinct and falls back to shuffle above it.
-    * ``pruned`` — the caller already replaced ``seen`` with a
-      partition-pruned read (``prune_seen_paths``: only the seen
-      files whose part range intersects the candidates' partition
-      ids); the join itself is a plain left_anti over that shrunken
-      side, which AQE is free to broadcast. Right when dupes dominate
-      candidates AND candidates cluster in few host partitions.
-    Results are identical; the crawl pins this at test scale.
-    """
-    if strategy == "broadcast":
-        hits = seen.select("url").join(
-            F.broadcast(candidates.select("url")), "url", "left_semi")
-        return candidates.join(F.broadcast(hits), "url", "left_anti")
-    return candidates.join(seen.select("url"), "url", "left_anti")
-
-
-SEEN_FILE_SCHEMA = "url string, added_wave int, host string, part int"
-
-
-def candidate_parts(candidates: DataFrame, n_partitions: int) -> list[int]:
-    """Distinct seen-partition ids hit by a candidate url set — at
-    most ``n_partitions`` rows through the driver (the partition id is
-    a pure function of host, identical to the one baked into seen
-    writes by crawl._partitioned_write)."""
-    rows = (candidates
-            .select(_partition_of(F.col("url"), n_partitions).alias("p"))
-            .distinct().collect())
-    return sorted(int(r.p) for r in rows)
-
-
-def select_seen_files(seen_paths: list[str], parts: list[int],
-                      with_stats: bool = False):
-    """File-level pruning via parquet FOOTER stats (pyarrow, metadata-
-    only — no row IO): keep a file iff at least one of its row groups
-    has a ``part`` min/max range intersecting ``parts``. Files without
-    stats (or without the column) are conservatively kept — pruning
-    may only ever widen, never lose rows.
-
-    ``with_stats=True`` additionally returns the kept and total byte
-    footprints ``(kept, kept_bytes, total_bytes)`` — the cost signal
-    the crawl's auto routing uses (one footer walk serves both the
-    decision and the read; file sizes are deterministic functions of
-    the partitioned write, so the decision is parallelism-independent).
-    """
-    import os
-
-    import pyarrow.parquet as pq
-
-    wanted = set(int(p) for p in parts)
-    kept: list[str] = []
-    kept_bytes = 0
-    total_bytes = 0
-    for root in seen_paths:
-        for name in sorted(os.listdir(root)):
-            if not name.endswith(".parquet"):
-                continue
-            fpath = os.path.join(root, name)
-            fsize = os.path.getsize(fpath) if with_stats else 0
-            total_bytes += fsize
-            md = pq.ParquetFile(fpath).metadata
-            col_idx = {md.schema.column(i).name: i
-                       for i in range(md.num_columns)}
-            if "part" not in col_idx:
-                kept.append(fpath)  # legacy file without part: keep
-                kept_bytes += fsize
-                continue
-            ci = col_idx["part"]
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or st.min is None:
-                    kept.append(fpath)
-                    kept_bytes += fsize
-                    break
-                if any(st.min <= p <= st.max for p in wanted):
-                    kept.append(fpath)
-                    kept_bytes += fsize
-                    break
-    if with_stats:
-        return kept, kept_bytes, total_bytes
-    return kept
-
-
-def prune_seen_paths(spark, seen_paths: list[str],
-                     parts: list[int],
-                     kept: list[str] | None = None) -> "DataFrame":
-    """Partition-pruned seen read: ``select_seen_files`` picks the
-    files whose footer stats intersect the candidates' partition ids;
-    kept files are read with an explicit schema plus a pushed
-    ``part IN (...)`` filter so the parquet reader also skips
-    non-matching ROW GROUPS inside kept files (seen writes sort by
-    (part, url) within tasks, keeping row-group part ranges tight).
-
-    This is manifest-style pruning done with footer stats — exactly
-    what an Iceberg table partitioned by ``part`` would give via its
-    manifests; at 10^10-url scale the footer listing is replaced by
-    the catalog's manifest files, same plan shape. The file list is
-    computed driver-side, so tests can assert untouched partitions
-    are literally never opened for row IO. A caller that already ran
-    ``select_seen_files`` (the auto router) passes ``kept`` to skip
-    the second footer walk.
-    """
-    if kept is None:
-        kept = select_seen_files(seen_paths, parts)
-    if not kept:
-        return (spark.createDataFrame([], SEEN_FILE_SCHEMA)
-                .select("url", "added_wave"))
-    # part IS NULL must pass the filter: a kept file WITHOUT a part
-    # column (select_seen_files keeps it conservatively) comes back
-    # with part=NULL under the pinned schema, and a bare isin() treats
-    # NULL as false — silently dropping every row of the kept file
-    # from the seen side (seen urls re-emitted as new: duplicate
-    # fetches, violating "pruning may only ever widen, never lose
-    # rows"). Advisor round-3 (medium).
-    return (spark.read.schema(SEEN_FILE_SCHEMA).parquet(*kept)
-            .where(F.col("part").isNull()
-                   | F.col("part").isin([int(p) for p in parts]))
-            .select("url", "added_wave"))
-
-
 def filter_new_urls(candidates: DataFrame, seen: DataFrame,
                     bloom: bytes | None = None,
-                    m: int = BLOOM_BITS_DEFAULT,
-                    strategy: str = "shuffle") -> DataFrame:
-    """Exact new-url filter: bloom prune (optional) then the exact
-    membership check (see ``_anti_seen`` for the strategy choice).
-    Candidates with maybe_seen=False skip the join entirely."""
+                    m: int = BLOOM_BITS_DEFAULT) -> DataFrame:
+    """Exact new-url filter: bloom prune (optional), then a plain
+    shuffle ``left_anti`` join against the seen table. Candidates with
+    maybe_seen=False skip the join entirely."""
     if bloom is None:
-        return _anti_seen(candidates, seen, strategy)
+        return candidates.join(seen.select("url"), "url", "left_anti")
     flagged = bloom_maybe_seen(candidates, bloom, m)
     definitely_new = flagged.where(~F.col("maybe_seen")).drop("maybe_seen")
     to_confirm = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = _anti_seen(to_confirm, seen, strategy)
-    return definitely_new.unionByName(confirmed)
-
-
-# --------------------------------------------------------------------------
-# Sharded bloom (the 10^10-url design point)
-# --------------------------------------------------------------------------
-#
-# A single global bitmap at 16 bits/key is ~20 GB at 10^10 urls — past
-# executor broadcast comfort. The sharded mode keys one bitmap per seen
-# partition (same pmod(xxhash64(host), P) as the seen table and cuckoo
-# shards), probed via a partition-local cogroup: each task materializes
-# ONLY its shard (m_shard/8 bytes per executor-task, never the global
-# bitmap), and maintenance ORs a wave's delta into each touched shard
-# executor-side — no driver-side bitmap at any point. Bit semantics are
-# IDENTICAL to the global bloom (same _bit_indices family over m_shard),
-# and blooms only prune, so scheduling is byte-identical between modes
-# (pinned by the invariance test).
-
-BLOOM_SHARD_SCHEMA = T.StructType([
-    T.StructField("partition", T.IntegerType()),
-    T.StructField("bitmap", T.BinaryType()),
-])
-
-
-def bloom_shard_bits(bitmap: bytes) -> int:
-    """m_shard is persisted via the bitmap length (same nbytes = m//8
-    + 1 convention as the global bloom)."""
-    return (len(bitmap) - 1) * 8
-
-
-def _check_shard_m(m_shard: int) -> int:
-    """m_shard must be a positive multiple of 8: the probe re-derives
-    the modulus from bitmap length as (nbytes - 1) * 8, which only
-    round-trips m // 8 + 1 bytes exactly when 8 | m. Any other m
-    would make the probe use a DIFFERENT modulus than the build —
-    bloom FALSE NEGATIVES, i.e. already-seen urls skipping the exact
-    anti-join (advisor round-6). Rejected loudly instead."""
-    if m_shard <= 0 or m_shard % 8:
-        raise ValueError(
-            f"m_shard must be a positive multiple of 8, got {m_shard} "
-            "(the shard modulus is persisted via bitmap length; a "
-            "non-multiple-of-8 m cannot round-trip and would produce "
-            "bloom false negatives on probe/resume)")
-    return m_shard
-
-
-def build_bloom_shards(seen: DataFrame, n_partitions: int,
-                       m_shard: int) -> DataFrame:
-    """One bloom bitmap per seen partition, built executor-side
-    (applyInPandas over the partition group — bit-setting is
-    order-independent, so shards are byte-deterministic at any
-    parallelism)."""
-    _check_shard_m(m_shard)
-    keyed = seen.select(
-        _partition_of(F.col("url"), n_partitions).alias("partition"),
-        F.xxhash64("url").alias("h"))
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        arr = np.zeros(m_shard // 8 + 1, dtype=np.uint8)
-        _set_bits(arr, pdf["h"], m_shard)
-        part = int(pdf["partition"].iloc[0]) if len(pdf) else 0
-        return pd.DataFrame({"partition": [part],
-                             "bitmap": [arr.tobytes()]})
-
-    return keyed.groupBy("partition").applyInPandas(
-        build, BLOOM_SHARD_SCHEMA)
-
-
-def merge_bloom_shards(shards: DataFrame, delta: DataFrame,
-                       n_partitions: int, m_shard: int) -> DataFrame:
-    """OR a wave's new-url delta into the shard bitmaps (cogroup —
-    partition-local, each shard touched once, O(delta) work). Shards
-    with no delta pass through unchanged; delta urls landing in a
-    partition with no shard yet create it."""
-    _check_shard_m(m_shard)
-    keyed = delta.select(
-        _partition_of(F.col("url"), n_partitions).alias("partition"),
-        F.xxhash64("url").alias("h"))
-
-    def merge(key, url_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
-        if len(shard_pdf):
-            arr = np.frombuffer(bytes(shard_pdf["bitmap"].iloc[0]),
-                                dtype=np.uint8).copy()
-        else:
-            arr = np.zeros(m_shard // 8 + 1, dtype=np.uint8)
-        if len(url_pdf):
-            _set_bits(arr, url_pdf["h"], m_shard)
-        return pd.DataFrame({"partition": [int(key[0])],
-                             "bitmap": [arr.tobytes()]})
-
-    return (keyed.groupBy("partition")
-            .cogroup(shards.groupBy("partition"))
-            .applyInPandas(merge, BLOOM_SHARD_SCHEMA))
-
-
-def bloom_shards_prune(candidates: DataFrame, shards: DataFrame,
-                       n_partitions: int) -> DataFrame:
-    """Adds boolean ``maybe_seen`` via a partition-local shard probe
-    (cogroup): False = definitely new. A task holds exactly one
-    shard's bitmap — the executor-memory contract of the sharded
-    design. Candidates in a partition with no shard are all
-    definitely-new (their partition has never seen a url)."""
-    keyed = (candidates
-             .withColumn("partition",
-                         _partition_of(F.col("url"), n_partitions))
-             .withColumn("h", F.xxhash64("url")))
-    out_schema = T.StructType(
-        keyed.schema.fields
-        + [T.StructField("maybe_seen", T.BooleanType())])
-
-    def probe(key, cand_pdf: pd.DataFrame, shard_pdf: pd.DataFrame):
-        cand_pdf = cand_pdf.copy()
-        if not len(shard_pdf):
-            cand_pdf["maybe_seen"] = False
-            return cand_pdf
-        bitmap = bytes(shard_pdf["bitmap"].iloc[0])
-        m = bloom_shard_bits(bitmap)
-        arr = np.frombuffer(bitmap, dtype=np.uint8)
-        idx = _bit_indices(cand_pdf["h"], m)
-        hit = np.ones(len(cand_pdf), dtype=bool)
-        for k in range(_K_HASHES):
-            b = idx[:, k]
-            hit &= (arr[b // 8] >> (b % 8).astype(np.uint8) & 1) \
-                .astype(bool)
-        cand_pdf["maybe_seen"] = hit
-        return cand_pdf
-
-    return (keyed.groupBy("partition")
-            .cogroup(shards.groupBy("partition"))
-            .applyInPandas(probe, out_schema)
-            .drop("h", "partition"))
-
-
-def bloom_shards_stats(shards: DataFrame) -> tuple[int, int]:
-    """(total_bits, total_popcount) across shards — P rows through
-    the driver, never a bitmap. Feeds the same est-fp saturation
-    signal as the global mode (keys distribute uniformly across
-    equal-sized shards, so the aggregate ratio is the per-shard
-    ratio in expectation)."""
-
-    @F.pandas_udf(T.LongType())
-    def pc(b: pd.Series) -> pd.Series:
-        return b.apply(lambda x: int(np.unpackbits(
-            np.frombuffer(bytes(x), dtype=np.uint8)).sum()))
-
-    @F.pandas_udf(T.LongType())
-    def bits(b: pd.Series) -> pd.Series:
-        return b.apply(lambda x: (len(bytes(x)) - 1) * 8)
-
-    row = (shards.select(pc(F.col("bitmap")).alias("pc"),
-                         bits(F.col("bitmap")).alias("m"))
-           .agg(F.coalesce(F.sum("m"), F.lit(0)).alias("m"),
-                F.coalesce(F.sum("pc"), F.lit(0)).alias("pc"))
-           .collect()[0])
-    return int(row.m), int(row.pc)
-
-
-def filter_new_urls_sharded(candidates: DataFrame, seen: DataFrame,
-                            shards: DataFrame, n_partitions: int,
-                            strategy: str = "shuffle") -> DataFrame:
-    """filter_new_urls with the sharded-bloom prune in place of the
-    broadcast bitmap: identical output (both blooms only prune; the
-    anti-join is the exactness), different memory shape."""
-    flagged = bloom_shards_prune(candidates, shards, n_partitions)
-    definitely_new = flagged.where(~F.col("maybe_seen")) \
-        .drop("maybe_seen")
-    to_confirm = flagged.where(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed = _anti_seen(to_confirm, seen, strategy)
+    confirmed = to_confirm.join(seen.select("url"), "url", "left_anti")
     return definitely_new.unionByName(confirmed)
 
 

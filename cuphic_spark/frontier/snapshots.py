@@ -201,26 +201,6 @@ def read_frontier_asof(spark, cfg: CrawlConfig, wave: int):
     return bands.read_full_frontier(spark, bands.load_manifest(fdir))
 
 
-def read_seen_asof(spark, cfg: CrawlConfig, wave: int):
-    """The seen set AS OF the end of ``wave`` (``-1`` = seeds only):
-    compact snapshot (if its horizon allows) + deltas through
-    ``wave``."""
-    from .crawl import _read_seen
-
-    return _read_seen(spark, cfg, wave)
-
-
-def read_fetch_log_asof(spark, cfg: CrawlConfig, wave: int):
-    """Fetch log restricted to waves <= ``wave``."""
-    import os as _os
-
-    paths = [_os.path.join(_wave_dir(cfg, w), "fetch_log")
-             for w in range(0, wave + 1)
-             if _os.path.isdir(_os.path.join(_wave_dir(cfg, w),
-                                             "fetch_log"))]
-    return spark.read.parquet(*paths)
-
-
 def list_snapshots(cfg: CrawlConfig) -> list[dict]:
     """Lineage records of all complete waves, in order."""
     out = []

@@ -1,7 +1,7 @@
 """XML/HTML bytes -> Hiccup tree, replicating the reference parser.
 
-Reimplements /root/reference/src/dk/cst/cuphic/xml.cljc with
-``xml.dom.minidom`` standing in for the JAXP DOM:
+Reimplements /root/reference/src/dk/cst/cuphic/xml.cljc with a
+streaming expat builder standing in for the JAXP DOM:
 
 * qualified names kept verbatim and keywordized by splitting on the
   first ``:`` (``xml:id`` -> ``:xml/id``; ``xmlns:t`` -> ``:xmlns/t``)
@@ -26,7 +26,6 @@ text nodes — the byte-identity target column of the pipeline.
 from __future__ import annotations
 
 import unicodedata
-from xml.dom import minidom
 
 from .values import Keyword, is_vector
 
@@ -92,49 +91,12 @@ def keywordize(s: str) -> Keyword:
     return kw
 
 
-_TEXT_TYPES = (minidom.Node.TEXT_NODE, minidom.Node.CDATA_SECTION_NODE)
-
-
-def _node_to_hiccup(node):
-    t = node.nodeType
-    if t != minidom.Node.ELEMENT_NODE:
-        return None  # comments, PIs, doctypes dropped
-    attrs = {}
-    if node.attributes is not None:
-        for i in range(node.attributes.length):
-            a = node.attributes.item(i)
-            attrs[keywordize(a.name)] = a.value
-    out = [keywordize(node.nodeName), attrs]
-    # Merge runs of adjacent Text/CDATA children into one string (the
-    # DOM .normalize() + getWholeText contract, xml.cljc:109,97-100 —
-    # expat chunking never splits a logical text node), then drop
-    # blank-only merged text (xml.cljc:123-125).
-    buf: list[str] = []
-    for child in node.childNodes:
-        if child.nodeType in _TEXT_TYPES:
-            buf.append(child.data)
-            continue
-        if buf:
-            s = "".join(buf)
-            buf.clear()
-            if not is_blank(s):
-                out.append(s)
-        h = _node_to_hiccup(child)
-        if h is not None:
-            out.append(h)
-    if buf:
-        s = "".join(buf)
-        if not is_blank(s):
-            out.append(s)
-    return out
-
-
 class _ExpatBuilder:
     """Streaming expat -> Hiccup builder. Same keep/drop contract as
-    the DOM path (comments/PIs dropped, blank-only merged text
-    dropped, text verbatim, qualified names preserved) at a fraction
-    of minidom's allocation cost — the parse stage is the pipeline's
-    hot loop, and minidom roughly triples its memory traffic."""
+    the reference's DOM walk (comments/PIs dropped, blank-only merged
+    text dropped, text verbatim, qualified names preserved) without
+    building a DOM — the parse stage is the pipeline's hot loop, and
+    a minidom DOM roughly triples its memory traffic."""
 
     __slots__ = ("root", "stack", "buf")
 
@@ -337,20 +299,6 @@ def extract_content(hiccup, drop_tags=BOILERPLATE_TAGS) -> str:
                 else n[1:]
             stack.extend(reversed(content))
     return "".join(parts)
-
-
-def parse_minidom(xml) -> list:
-    """DOM reference path (kept for differential testing)."""
-    if isinstance(xml, bytes):
-        dom = minidom.parseString(xml)
-    elif isinstance(xml, str):
-        dom = minidom.parseString(xml.encode("utf-8"))
-    else:
-        dom = minidom.parse(xml)
-    try:
-        return _node_to_hiccup(dom.documentElement)
-    finally:
-        dom.unlink()
 
 
 def extract_text(hiccup) -> str:

@@ -147,24 +147,6 @@ def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
         .astype(np.uint8)
 
 
-def _blocks(channel: np.ndarray) -> np.ndarray:
-    """(H, W) padded to multiples of 8 by edge replication ->
-    (n_blocks, 8, 8) in row-major block order."""
-    h, w = channel.shape
-    ph, pw = -h % 8, -w % 8
-    padded = np.pad(channel, ((0, ph), (0, pw)), mode="edge")
-    bh, bw = padded.shape[0] // 8, padded.shape[1] // 8
-    return (padded.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-            .reshape(bh * bw, 8, 8))
-
-
-def _unblocks(blocks: np.ndarray, h: int, w: int) -> np.ndarray:
-    bh, bw = -(-h // 8), -(-w // 8)
-    grid = (blocks.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3)
-            .reshape(bh * 8, bw * 8))
-    return grid[:h, :w]
-
-
 class _BitWriter:
     __slots__ = ("out", "acc", "nbits")
 

@@ -428,112 +428,6 @@ def test_bloom_path_same_result_and_incremental(spark, tmp_path, oracle_state):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_bloom_sharded_invariance(spark, tmp_path, oracle_state):
-    """bloom_mode='sharded' (the 10^10-url design point: one bitmap
-    per seen partition, cogroup probe/maintenance, no broadcast and
-    no driver bitmap) must schedule BYTE-IDENTICALLY to the global
-    bitmap mode — blooms only prune; the anti-join is the exactness.
-    Pinned three ways: fetch_log equality vs the oracle, non-bloom
-    metrics equality vs the plain oracle, and resume continuing from
-    the persisted shards."""
-    d = str(tmp_path / "sharded_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, use_bloom=True,
-                      bloom_min_seen=0, bloom_mode="sharded",
-                      partitions=4, **CFG)
-    summary = crawl(spark, cfg)
-    # scheduling identical to the no-bloom oracle run
-    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
-    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
-        [(e["wave"], e["rank_in_wave"], e["url"])
-         for e in oracle_state.fetch_log]
-    # all non-bloom metrics identical; sharded emits its own bloom_*
-    assert [dict(m, **{k: None for k in
-                       ("bloom_m", "bloom_popcount", "bloom_est_fp")})
-            for m in summary["metrics"]] == \
-        [dict(m, bloom_m=None, bloom_popcount=None, bloom_est_fp=None)
-         for m in oracle_state.metrics]
-    assert all("bloom_popcount" in m for m in summary["metrics"])
-
-    # shard bitmaps: identical to a from-scratch distributed build
-    # over the final seen table (incremental merge = full rebuild),
-    # and popcount totals match the persisted metric
-    import os as _os
-
-    from cuphic_spark.frontier.crawl import _read_seen
-    from cuphic_spark.frontier.seen import (
-        bloom_shard_bits,
-        bloom_shards_stats,
-        build_bloom_shards,
-    )
-
-    last = last_complete_wave(cfg)
-    shards = spark.read.parquet(
-        _os.path.join(d, f"wave={last:05d}", "bloom_shards"))
-    got = {r.partition: bytes(r.bitmap) for r in shards.collect()}
-    m_shard = bloom_shard_bits(next(iter(got.values())))
-    scratch = {r.partition: bytes(r.bitmap) for r in build_bloom_shards(
-        _read_seen(spark, cfg, last), cfg.partitions, m_shard).collect()}
-    assert got == scratch
-    m_total, pc = bloom_shards_stats(shards)
-    assert summary["metrics"][-1]["bloom_popcount"] == pc
-    assert summary["metrics"][-1]["bloom_m"] == m_total
-
-    # resume: drop the last wave, re-run, identical metrics
-    shutil.rmtree(_os.path.join(d, f"wave={last:05d}"))
-    resumed = crawl(spark, cfg)
-    assert resumed["start_wave"] == last
-    assert resumed["metrics"][-1] == summary["metrics"][-1]
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_bloom_shards_prune_no_false_negatives(spark):
-    """Unit contract of the shard primitives: every seen url must be
-    flagged maybe_seen=True (false negatives would drop re-discovered
-    urls from the anti-join and re-crawl... no — worse, the
-    definitely-new bypass would DUPLICATE them into the frontier);
-    unseen-partition candidates are all definitely-new; merge of a
-    delta equals a from-scratch build over the union."""
-    from cuphic_spark.frontier.seen import (
-        bloom_shards_prune,
-        build_bloom_shards,
-        merge_bloom_shards,
-    )
-
-    base = spark.createDataFrame(
-        [(f"https://host{i % 5}.example/doc/{i}",) for i in range(200)],
-        "url string")
-    delta = spark.createDataFrame(
-        [(f"https://host{i % 5}.example/doc/{i}",)
-         for i in range(200, 260)], "url string")
-    m = 1 << 12
-    shards = build_bloom_shards(base, 4, m)
-    merged = merge_bloom_shards(shards, delta, 4, m)
-    scratch = build_bloom_shards(base.unionByName(delta), 4, m)
-    assert {(r.partition, bytes(r.bitmap)) for r in merged.collect()} \
-        == {(r.partition, bytes(r.bitmap)) for r in scratch.collect()}
-    # no false negatives over every inserted url
-    flagged = bloom_shards_prune(base.unionByName(delta), merged, 4)
-    assert flagged.where(~F.col("maybe_seen")).count() == 0
-    # a host universe disjoint from every shard: all definitely-new
-    other = spark.createDataFrame(
-        [("https://elsewhere%d.example/x/%d" % (i, i),)
-         for i in range(40)], "url string")
-    empty_shards = build_bloom_shards(
-        spark.createDataFrame([], "url string"), 4, m)
-    fl2 = bloom_shards_prune(other, empty_shards, 4)
-    assert fl2.where(F.col("maybe_seen")).count() == 0
-
-    # m_shard not a multiple of 8 cannot round-trip through the
-    # bitmap-length modulus derivation (probe would use a different
-    # modulus than the build -> false negatives): rejected loudly
-    import pytest as _pytest
-    for bad in (100, 7, 0, -8):
-        with _pytest.raises(ValueError, match="multiple of 8"):
-            build_bloom_shards(base, 4, bad)
-        with _pytest.raises(ValueError, match="multiple of 8"):
-            merge_bloom_shards(shards, delta, 4, bad)
-
-
 def test_oracle_xxh64_matches_spark(spark):
     """The oracle's pure-Python xxh64 must equal Spark's F.xxhash64
     (seed 42, UTF-8 bytes) on strings spanning every length class of
@@ -662,88 +556,57 @@ def test_auto_compaction_same_results(spark, tmp_path, oracle_state):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_broadcast_seen_check_same_result(spark, tmp_path, oracle_state):
-    """seen_check='broadcast' (two-phase semi/anti where the seen
-    table only streams) must produce identical results; the plan must
-    actually broadcast (no sort-merge join on the seen side)."""
-    d = str(tmp_path / "bcast_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="broadcast", **CFG)
-    summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
-    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
-        [(e["wave"], e["rank_in_wave"], e["url"])
-         for e in oracle_state.fetch_log]
-    shutil.rmtree(d, ignore_errors=True)
-
-    from cuphic_spark.frontier.seen import _anti_seen
-
-    cands = spark.createDataFrame(
-        [(f"https://h{i}.x/{i}",) for i in range(50)], "url string")
-    seen = spark.createDataFrame(
-        [(f"https://h{i}.x/{i}", 0) for i in range(0, 100, 2)],
-        "url string, added_wave int")
-    out = _anti_seen(cands, seen, "broadcast")
-    got = sorted(r.url for r in out.collect())
-    want = sorted(f"https://h{i}.x/{i}" for i in range(1, 50, 2))
-    assert got == want
-    from cuphic_spark.plans import executed_plan
-
-    plan = executed_plan(out)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
+def _plan_nodes(node, ancestors=()):
+    """(nodeName, ancestor nodeNames) for every node of a JVM plan —
+    children AND inner children, so the plans behind cached
+    (InMemoryRelation) inputs are walked too."""
+    name = node.nodeName()
+    out = [(name, ancestors)]
+    for seq in (node.children(), node.innerChildren()):
+        for i in range(seq.size()):
+            out += _plan_nodes(seq.apply(i), ancestors + (name,))
+    return out
 
 
-def test_pruned_seen_check_same_result(spark, tmp_path, oracle_state):
-    """seen_check='pruned' (footer-stat file pruning of the seen side)
-    must produce identical results — pruning is IO-only."""
-    d = str(tmp_path / "pruned_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="pruned", **CFG)
-    summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
-    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
-        [(e["wave"], e["rank_in_wave"], e["url"])
-         for e in oracle_state.fetch_log]
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_prune_seen_files_skips_untouched_parts(spark, tmp_path):
-    """The pruned strategy's file selection must keep EXACTLY the
-    files whose part stats intersect the candidates' partition ids —
-    untouched partitions are never opened for row IO — and the pruned
-    read must return the same rows as a full read + filter."""
+def test_seen_filter_never_broadcasts_fetch_chain(spark, tmp_path,
+                                                 monkeypatch,
+                                                 oracle_state):
+    """The URL-seen check is one path — bloom prune + shuffle anti-join
+    — so in the executed plan of every default wave's seen-delta write
+    the fetch mapInArrow sits below no BroadcastExchange (a broadcast
+    whose build side embeds the wave's fetch+parse chain is what once
+    needed a raised spark.sql.broadcastTimeout), and the lineage
+    records the shuffle strategy."""
+    import json as _json
     import os
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+    import cuphic_spark.frontier.crawl as crawl_mod
 
-    from cuphic_spark.frontier.seen import (
-        prune_seen_paths,
-        select_seen_files,
-    )
+    plans = []
+    run_wave = crawl_mod.run_wave
 
-    root = tmp_path / "seen_flat"
-    os.makedirs(root)
-    for p in range(4):  # one part per file: exact pruning expected
-        tbl = pa.table({
-            "url": [f"https://h{p}.x/{i}" for i in range(10)],
-            "added_wave": pa.array([0] * 10, type=pa.int32()),
-            "host": [f"h{p}.x"] * 10,
-            "part": pa.array([p] * 10, type=pa.int32()),
-        })
-        pq.write_table(tbl, root / f"part-{p:05d}.parquet")
+    def recording_run_wave(*args, **kw):
+        res = run_wave(*args, **kw)
+        plans.append(_plan_nodes(
+            res.seen_delta_out._jdf.queryExecution().executedPlan()))
+        return res
 
-    kept = select_seen_files([str(root)], [2])
-    assert kept == [str(root / "part-00002.parquet")]
-    kept = select_seen_files([str(root)], [1, 3])
-    assert kept == [str(root / f"part-{p:05d}.parquet") for p in (1, 3)]
-
-    got = {r.url for r in
-           prune_seen_paths(spark, [str(root)], [1, 3]).collect()}
-    assert got == {f"https://h{p}.x/{i}" for p in (1, 3) for i in range(10)}
-    # empty selection: explicit-schema empty DF, not a read error
-    assert prune_seen_paths(spark, [str(root)], []).count() == 0
+    monkeypatch.setattr(crawl_mod, "run_wave", recording_run_wave)
+    d = str(tmp_path / "shuffle_only")
+    cfg = CrawlConfig(checkpoint_dir=d, **CFG)
+    assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
+    assert len(plans) == CFG["n_waves"]
+    for nodes in plans:
+        fetches = [anc for name, anc in nodes if "MapInArrow" in name]
+        assert fetches, [name for name, _ in nodes]
+        for anc in fetches:
+            assert not any(a.startswith("BroadcastExchange")
+                           for a in anc), anc
+    for w in range(CFG["n_waves"]):
+        with open(os.path.join(d, f"wave={w:05d}",
+                               "_lineage.json")) as fh:
+            assert _json.load(fh)["seen_strategy"] == "shuffle"
+    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_score_histogram_guard_raises(spark, tmp_path, monkeypatch):
@@ -760,20 +623,6 @@ def test_score_histogram_guard_raises(spark, tmp_path, monkeypatch):
                       max_score_histogram=8, **CFG)
     with pytest.raises(ValueError, match="max_score_histogram"):
         crawl(spark, cfg)
-
-
-def test_broadcast_candidate_cap_falls_back(spark, tmp_path, oracle_state):
-    """Explicit seen_check='broadcast' with a candidate volume above
-    broadcast_max_candidates must warn and fall back to shuffle —
-    results unchanged (advisor round-2: unbounded F.broadcast of the
-    candidate set can exceed driver memory)."""
-    d = str(tmp_path / "bcap_crawl")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="broadcast",
-                      broadcast_max_candidates=1, **CFG)
-    with pytest.warns(UserWarning, match="broadcast_max_candidates"):
-        summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    shutil.rmtree(d, ignore_errors=True)
 
 
 def test_frontier_exhaustion(spark, tmp_path):
@@ -1119,75 +968,6 @@ def test_crash_mid_wave_resume_identical(spark, tmp_path, oracle_state):
     shutil.rmtree(d, ignore_errors=True)
 
 
-def test_auto_seen_strategy_picks_pruned_when_local(spark, tmp_path,
-                                                    oracle_state):
-    """auto seen_check: candidates over the broadcast ceiling whose
-    pruned-read byte footprint passes the threshold route to the
-    footer-pruned read (data-dependent, parallelism-independent
-    decision); results stay oracle-exact. broadcast_seen_min=0 +
-    broadcast_max_candidates=1 force the over-cap branch from wave 1
-    on; the permissive byte threshold admits the pruned read even
-    though this toy universe's candidates span every seen host (see
-    test_auto_seen_routing_covers_all_strategies for the threshold
-    behavior itself)."""
-    d = str(tmp_path / "auto_pruned")
-    cfg = CrawlConfig(checkpoint_dir=d, seen_check="auto",
-                      broadcast_seen_min=0, broadcast_max_candidates=1,
-                      partitions=64, pruned_seen_byte_frac=1.0, **CFG)
-    summary = crawl(spark, cfg)
-    assert summary["metrics"] == oracle_state.metrics
-    log = read_fetch_log(spark, cfg).orderBy("wave", "rank_in_wave").collect()
-    assert [(r.wave, r.rank_in_wave, r.url) for r in log] == \
-        [(e["wave"], e["rank_in_wave"], e["url"])
-         for e in oracle_state.fetch_log]
-    shutil.rmtree(d, ignore_errors=True)
-
-
-def test_prune_seen_paths_keeps_partless_file_rows(spark, tmp_path):
-    """Advisor round-3 (medium): a kept file WITHOUT a part column
-    (select_seen_files keeps it conservatively) reads back with
-    part=NULL under the pinned schema — the pruned read must KEEP
-    those rows (a bare isin() evaluates NULL as false and would
-    silently drop every row of the kept file, re-emitting seen urls
-    as new)."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cuphic_spark.frontier.seen import (
-        prune_seen_paths,
-        select_seen_files,
-    )
-
-    root = tmp_path / "seen_mixed"
-    os.makedirs(root)
-    # two modern files with part stats + one legacy file without part
-    for p in (0, 1):
-        pq.write_table(pa.table({
-            "url": [f"https://h{p}.x/{i}" for i in range(5)],
-            "added_wave": pa.array([0] * 5, type=pa.int32()),
-            "host": [f"h{p}.x"] * 5,
-            "part": pa.array([p] * 5, type=pa.int32()),
-        }), root / f"part-{p:05d}.parquet")
-    pq.write_table(pa.table({
-        "url": [f"https://legacy.x/{i}" for i in range(5)],
-        "added_wave": pa.array([0] * 5, type=pa.int32()),
-        "host": ["legacy.x"] * 5,
-    }), root / "legacy.parquet")
-
-    # selection keeps part=1 and (conservatively) the legacy file
-    kept = select_seen_files([str(root)], [1])
-    assert str(root / "legacy.parquet") in kept
-    assert str(root / "part-00001.parquet") in kept
-    assert str(root / "part-00000.parquet") not in kept
-
-    got = {r.url for r in
-           prune_seen_paths(spark, [str(root)], [1]).collect()}
-    assert got == ({f"https://h1.x/{i}" for i in range(5)}
-                   | {f"https://legacy.x/{i}" for i in range(5)})
-
-
 def test_subband_prefix_read_is_o_cap(spark, tmp_path):
     """Round-3 verdict item 2 — THE dense-band scale property: a band
     holding 100x the wave cap is read as a score-sorted run PREFIX
@@ -1268,100 +1048,6 @@ def test_band_split_invariance_vs_oracle(spark, tmp_path, oracle_state,
         [(e["wave"], e["rank_in_wave"], e["url"])
          for e in oracle_state.fetch_log]  # layout-INDEPENDENT ordering
     shutil.rmtree(d, ignore_errors=True)
-
-
-def test_auto_seen_routing_covers_all_strategies(spark, tmp_path,
-                                                 oracle_state):
-    """Round-3 verdict item 5 — the bytes-based auto cost model: on
-    constructed inputs auto must route to each of the three seen
-    strategies (visible in lineage), and every route produces
-    oracle-identical results."""
-    import json as _json
-    import os
-
-    def strategies(d):
-        out = []
-        for w in range(CFG["n_waves"]):
-            with open(os.path.join(d, f"wave={w:05d}",
-                                   "_lineage.json")) as fh:
-                out.append(_json.load(fh)["seen_strategy"])
-        return out
-
-    # 1. big seen + candidates under the ceiling -> broadcast from
-    # wave 1 on. Wave 0 has NO links hint, and auto must never
-    # broadcast without an affirmative volume prediction (a first
-    # production wave's candidates are unbounded — the round-7 4M
-    # bootstrap blew the 300 s broadcast-build timeout exactly here)
-    d1 = str(tmp_path / "route_bcast")
-    cfg = CrawlConfig(checkpoint_dir=d1, seen_check="auto",
-                      broadcast_seen_min=0, **CFG)
-    assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
-    s1 = strategies(d1)
-    assert s1[0] != "broadcast"
-    assert set(s1[1:]) == {"broadcast"}
-
-    # 2. over the candidate ceiling with the byte threshold at 1.0:
-    # the pruned read is always admissible -> pruned (including
-    # wave 0: the hint-less wave routes through the same byte
-    # probe). The permissive threshold is needed because this toy
-    # universe's candidates span EVERY seen host, so pruning saves
-    # ~0 bytes — which the byte model detects (case 3); the old
-    # partition-count rule wrongly chose pruned.
-    d2 = str(tmp_path / "route_pruned")
-    cfg = CrawlConfig(checkpoint_dir=d2, seen_check="auto",
-                      broadcast_seen_min=0, broadcast_max_candidates=1,
-                      partitions=64, pruned_seen_byte_frac=1.0, **CFG)
-    assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
-    s2 = strategies(d2)
-    assert "broadcast" not in s2 and "pruned" in s2
-
-    # 3. same ceiling at the DEFAULT threshold: candidates hit every
-    # seen host's partition, kept bytes ~= total bytes, the pruned
-    # read saves nothing -> shuffle
-    d3 = str(tmp_path / "route_shuffle")
-    cfg = CrawlConfig(checkpoint_dir=d3, seen_check="auto",
-                      broadcast_seen_min=0, broadcast_max_candidates=1,
-                      partitions=64, **CFG)
-    assert crawl(spark, cfg)["metrics"] == oracle_state.metrics
-    s3 = strategies(d3)
-    assert "broadcast" not in s3 and "shuffle" in s3
-    assert "pruned" not in s3
-
-    for d in (d1, d2, d3):
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_select_seen_files_byte_stats(tmp_path):
-    """The auto router's cost signal: select_seen_files(with_stats=
-    True) reports the kept and total byte footprints from the same
-    footer walk that picks the files."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from cuphic_spark.frontier.seen import select_seen_files
-
-    root = tmp_path / "seen_bytes"
-    os.makedirs(root)
-    sizes = {}
-    for p in range(4):
-        n = 10 * (p + 1)  # different sizes per part
-        pq.write_table(pa.table({
-            "url": [f"https://h{p}.x/{i}" for i in range(n)],
-            "added_wave": pa.array([0] * n, type=pa.int32()),
-            "host": [f"h{p}.x"] * n,
-            "part": pa.array([p] * n, type=pa.int32()),
-        }), root / f"part-{p:05d}.parquet")
-        sizes[p] = os.path.getsize(root / f"part-{p:05d}.parquet")
-
-    kept, kb, tb = select_seen_files([str(root)], [1, 3],
-                                     with_stats=True)
-    assert kept == [str(root / f"part-{p:05d}.parquet") for p in (1, 3)]
-    assert kb == sizes[1] + sizes[3]
-    assert tb == sum(sizes.values())
-    # plain call keeps its original signature
-    assert select_seen_files([str(root)], [1, 3]) == kept
 
 
 def test_iceberg_probe_documents_absence(monkeypatch):

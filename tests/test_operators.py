@@ -682,8 +682,11 @@ def test_connected_components_nonconvergence_raises(spark):
     # localCheckpoint blocks, not leak them into the block manager
     assert persistent_ids() == before
     # enough rounds: one component labeled by the min node
-    cc = {r.node: r.component
-          for r in connected_components(chain, max_iter=15).collect()}
+    # free the result's checkpoint blocks: left to the JVM GC, their
+    # cleanup can land inside the next test's persistent-RDD snapshot
+    out = connected_components(chain, max_iter=15)
+    cc = {r.node: r.component for r in out.collect()}
+    out.free_components()
     assert set(cc.values()) == {0} and len(cc) == 10
 
 

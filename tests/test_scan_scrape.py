@@ -18,11 +18,11 @@ from cuphic_spark.kernel import (
 )
 from cuphic_spark.kernel.reader import parse as p
 from cuphic_spark.kernel.values import Keyword, Symbol
+from cuphic_spark.sources.tei import TEI_DIR, tei_files
 
 S = Symbol
 K = Keyword
 
-TEI = pathlib.Path("/root/reference/resources/examples/tei")
 GOLDENS = pathlib.Path(__file__).resolve().parents[1] / "goldens"
 
 PATTERNS = {
@@ -38,7 +38,8 @@ PATTERNS = {
 
 @pytest.fixture(scope="module")
 def result():
-    tree = parse_xml((TEI / "test-1307-anno-tei.xml").read_bytes())
+    tei_files()  # a missing or partial corpus fails with one message
+    tree = parse_xml((TEI_DIR / "test-1307-anno-tei.xml").read_bytes())
     return scrape(tree, PATTERNS)
 
 
@@ -148,3 +149,32 @@ def test_scan_multi_pattern_single_pass():
     div_row, span_row = rows
     assert div_row[2][0] is not None and div_row[2][1] is None
     assert span_row[2][0] is None and span_row[2][1] is not None
+
+
+def test_tei_loader_refuses_missing_or_partial_corpus(tmp_path,
+                                                      monkeypatch):
+    """The corpus loader fails loudly: a missing TEI_DIR, or one not
+    holding exactly TEI_FILES *.xml files, raises with a message that
+    names the directory — tei_pages included, before any Spark work."""
+    from cuphic_spark.sources import tei
+
+    monkeypatch.setattr(tei, "TEI_DIR", tmp_path / "missing")
+    with pytest.raises(FileNotFoundError, match="does not exist"):
+        tei.tei_files()
+
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    monkeypatch.setattr(tei, "TEI_DIR", corpus)
+    for n in range(tei.TEI_FILES + 2):
+        if n == tei.TEI_FILES:
+            assert [f.name for f in tei.tei_files()] == \
+                sorted(f"f{i}.xml" for i in range(n))
+        else:
+            with pytest.raises(ValueError,
+                               match=rf"holds {n} \*\.xml files, "
+                                     r"expected exactly 12"):
+                tei.tei_files()
+        if n == 3:
+            with pytest.raises(ValueError, match="holds 3"):
+                tei.tei_pages(spark=None)
+        (corpus / f"f{n}.xml").write_bytes(b"<TEI/>")

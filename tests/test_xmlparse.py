@@ -10,9 +10,9 @@ from cuphic_spark.kernel import parse_xml, extract_text
 from cuphic_spark.kernel.reader import parse as p
 from cuphic_spark.kernel.values import Keyword
 from cuphic_spark.kernel.xmlparse import is_blank, keywordize
+from cuphic_spark.sources.tei import tei_files
 
 K = Keyword
-TEI = pathlib.Path("/root/reference/resources/examples/tei")
 GOLDEN_TEXT = pathlib.Path(__file__).resolve().parents[1] / "goldens" / "text"
 
 
@@ -69,7 +69,7 @@ def test_tag_with_namespace_prefix():
     assert h[0] == K("t/r")
 
 
-@pytest.mark.parametrize("path", sorted(TEI.glob("*.xml")),
+@pytest.mark.parametrize("path", tei_files(),
                          ids=lambda p: p.stem)
 def test_golden_text_byte_identity(path):
     tree = parse_xml(path.read_bytes())
@@ -89,17 +89,14 @@ def test_streaming_extractor_matches_tree_extraction():
     """extract_text_streaming must be byte-identical to
     extract_text(parse(...)) — TEI corpus + edge shapes (comments
     splitting text runs, CDATA, blank-only runs, deep nesting)."""
-    import pathlib
-
     from cuphic_spark.kernel.xmlparse import (
         extract_text,
         extract_text_streaming,
         parse,
     )
 
-    tei_dir = pathlib.Path("/root/reference/resources/examples/tei")
     n = 0
-    for f in sorted(tei_dir.glob("*.xml")):
+    for f in tei_files():
         data = f.read_bytes()
         assert extract_text_streaming(data) == extract_text(parse(data)), f
         n += 1
